@@ -53,37 +53,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.storagelevel import StorageLevel
 
 _REGISTRY_LOCK = threading.Lock()
-_BUILT: dict[tuple, DataFrame] = {}
+_BUILT: dict[tuple, object] = {}
 _BUILDING: dict[tuple, threading.Lock] = {}
-
-
-def shared_df(
-    spark: SparkSession,
-    key: tuple[Hashable, ...],
-    build: Callable[[], DataFrame],
-) -> DataFrame:
-    """Return the persisted DataFrame for ``key``, building it on first use.
-
-    Build-and-materialize happens under a per-key lock: concurrent queries
-    needing the same subtree wait for one materialization instead of racing
-    to compute the same partitions.  Distinct keys build concurrently.
-    """
-    full_key = (spark.sparkContext.applicationId,) + key
-    with _REGISTRY_LOCK:
-        df = _BUILT.get(full_key)
-        if df is not None:
-            return df
-        key_lock = _BUILDING.setdefault(full_key, threading.Lock())
-    with key_lock:
-        with _REGISTRY_LOCK:
-            df = _BUILT.get(full_key)
-            if df is not None:
-                return df
-        df = build().persist(StorageLevel.MEMORY_AND_DISK)
-        df.count()  # materialize eagerly so waiting queries reuse, not race
-        with _REGISTRY_LOCK:
-            _BUILT[full_key] = df
-    return df
+#: bumped by ``reset()``: a build that started before a reset must not
+#: store its (pre-reset) result after it
+_GENERATION = 0
 
 
 def shared_obj(
@@ -91,58 +65,76 @@ def shared_obj(
     key: tuple[Hashable, ...],
     build: Callable[[], object],
 ) -> object:
-    """Tuple-valued sibling of ``shared_df`` (round 17, VERDICT r16 ask #4):
-    memoize an arbitrary build RESULT — e.g. the BPE merge chain's
-    ``(words, sym, tops)``, whose frames have different schemas and are
-    already eagerly materialized by the build itself (localCheckpoint) — per
-    (application, key) under the same per-key lock discipline.
+    """Return the memoized build result for ``key``, building it on first use.
 
-    Unlike ``shared_df`` it does NOT persist or count: the builder is
-    responsible for materialization.  ``reset()`` forgets these entries too
-    (the bench's sequential warm pass must measure a REAL rebuild);
-    checkpointed blocks of dropped entries are reclaimed by the
-    ContextCleaner once unreferenced, which is fine — entries here are
-    vocab-bounded, not corpus-sized."""
+    Builds run under a per-key lock: concurrent queries needing the same
+    entry wait for one build instead of racing to compute it.  Distinct
+    keys build concurrently.  The builder is responsible for
+    materialization — e.g. the BPE merge chain's ``(words, sym, tops)``,
+    whose frames are eagerly checkpointed by the build itself.
+
+    A build that straddles a ``reset()`` is returned to its caller but not
+    stored, so the next caller rebuilds — ``reset()`` forgets every entry,
+    including one whose build was in flight.
+    """
     full_key = (spark.sparkContext.applicationId,) + key
     with _REGISTRY_LOCK:
-        if full_key in _BUILT_OBJ:
-            return _BUILT_OBJ[full_key]
-        key_lock = _BUILDING.setdefault(("obj",) + full_key, threading.Lock())
+        if full_key in _BUILT:
+            return _BUILT[full_key]
+        key_lock = _BUILDING.setdefault(full_key, threading.Lock())
     with key_lock:
         with _REGISTRY_LOCK:
-            if full_key in _BUILT_OBJ:
-                return _BUILT_OBJ[full_key]
+            if full_key in _BUILT:
+                return _BUILT[full_key]
+            generation = _GENERATION
         obj = build()
         with _REGISTRY_LOCK:
-            _BUILT_OBJ[full_key] = obj
+            if generation == _GENERATION:
+                _BUILT[full_key] = obj
     return obj
 
 
-_BUILT_OBJ: dict[tuple, object] = {}
+def shared_df(
+    spark: SparkSession,
+    key: tuple[Hashable, ...],
+    build: Callable[[], DataFrame],
+) -> DataFrame:
+    """``shared_obj`` whose builder persists (MEMORY_AND_DISK) and counts
+    the DataFrame, so waiting queries reuse the cached partitions instead
+    of racing to compute them."""
+
+    def materialize() -> DataFrame:
+        df = build().persist(StorageLevel.MEMORY_AND_DISK)
+        df.count()
+        return df
+
+    return shared_obj(spark, key, materialize)
 
 
 def reset(spark: SparkSession) -> None:
-    """Unpersist and forget every shared subtree built by this application.
+    """Unpersist and forget every shared entry built by this application.
 
     Measurement hook, not a production path: the bench's sequential pass
     re-times each warm build contention-free AFTER the concurrent mix, and
     a cache hit would measure the memo (microseconds) instead of the build.
     Dropping the entries in dependency-agnostic bulk is safe because the
-    builds re-memoize on next call.
+    builds re-memoize on next call.  A DataFrame entry whose build
+    straddles the reset is not stored, so its persisted partitions stay
+    with its caller until the application ends.
 
-    ``_BUILDING`` locks are deliberately LEFT IN PLACE: a concurrent
-    ``shared_df`` caller may hold (or be queued on) a key's lock, and popping
-    it would hand the next caller a fresh lock for the same key — two threads
-    would then build and persist the same subtree, leaking the overwritten
-    entry's partitions until app exit.  Keeping the lock object means rebuild
-    serialization per key survives a reset; the few retained Lock objects are
-    trivially small.  Eviction blocks so a re-timed rebuild that starts right
-    after reset() never overlaps the old partitions' eviction I/O."""
+    ``_BUILDING`` locks are deliberately LEFT IN PLACE: a concurrent caller
+    may hold (or be queued on) a key's lock, and popping it would hand the
+    next caller a fresh lock for the same key — two threads would then
+    build the same entry at once.  The few retained Lock objects are
+    trivially small.  Eviction blocks so a re-timed rebuild that starts
+    right after reset() never overlaps the old partitions' eviction I/O.
+    Checkpointed blocks inside dropped tuple entries are reclaimed by the
+    ContextCleaner once unreferenced."""
+    global _GENERATION
     app_id = spark.sparkContext.applicationId
     with _REGISTRY_LOCK:
-        mine = [k for k in _BUILT if k[0] == app_id]
-        dropped = [_BUILT.pop(k) for k in mine]
-        for k in [k for k in _BUILT_OBJ if k[0] == app_id]:
-            _BUILT_OBJ.pop(k)
-    for df in dropped:
-        df.unpersist(blocking=True)
+        _GENERATION += 1
+        dropped = [_BUILT.pop(k) for k in [k for k in _BUILT if k[0] == app_id]]
+    for obj in dropped:
+        if isinstance(obj, DataFrame):
+            obj.unpersist(blocking=True)

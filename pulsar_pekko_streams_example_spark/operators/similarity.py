@@ -242,7 +242,8 @@ _PAIR_COS_SCHEMA = StructType(
 
 def _pair_cosines(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     """Arrow-batched per-pair cosine, bit-identical to the declarative
-    ``safe_cos(DOT(ea, eb), na * nb)`` WITHOUT the totalizing coalesce —
+    ``safe_cos(DOT(ea, eb), na * nb)`` WITHOUT the totalizing coalesce
+    (one corner excepted, below) —
     NULL propagates (the scored_candidate_pairs contract), so the NULL
     decision rides in as precomputed booleans (``hna``/``hnb``: the JVM-side
     ``nrm IS NULL``, true iff the vector has a NULL element) because Arrow
@@ -252,12 +253,20 @@ def _pair_cosines(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     Per pair, in the JVM/DuckDB twin order exactly:
     - either side has a NULL element, or lengths differ (zip_with NULL-pads)
       → cosine NULL (NaN in the output buffer → Arrow null);
-    - else dot = dimension-ordered left fold (one fused multiply-add per
-      dimension over the batch — same IEEE op sequence as the zip_with
-      aggregate, so doubles are bit-identical);
+    - else dot = dimension-ordered left fold (one multiply and one add
+      per dimension over the batch, deliberately NOT fused: an FMA rounds
+      once and would differ from the zip_with aggregate's separate
+      multiply-then-add, which this sequence matches bit for bit);
     - prod = na * nb (the JVM-computed norms ride in, so the product is the
       same double); prod == 0 → -1; NaN quotient → -1 (nanvl twin); ±Inf
-      survives."""
+      survives.
+
+    The corner: a ragged pair (lengths differ) whose norm product is 0 —
+    two zero-norm vectors of different lengths — gives NULL here, where the
+    declarative expression hits its prod = 0 branch first and gives -1.
+    Both consumers mask it: ``embedding_near_dup``'s threshold filter drops
+    NULL and -1 alike, and ``semdedup_threshold_curve`` coalesces NULL to
+    -1."""
     import numpy as np
 
     for pdf in batches:

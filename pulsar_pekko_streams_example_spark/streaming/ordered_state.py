@@ -159,23 +159,12 @@ def _process_key(
     yield out
 
 
-def _ttl_expiry_ms(max_event_ms: int | None, idle_timeout_ms: int, wm: int) -> int:
-    """The idle cursor's expiry point: running max event time + TTL, with
-    the engine's floor (a timeout/timer must sit strictly past the current
-    watermark; also the fallback when the key has never carried an event
-    time).  Shared by the applyInPandasWithState and transformWithState
-    variants so their lapse points are definitionally identical."""
-    base = wm if max_event_ms is None else max_event_ms
-    return max(base + idle_timeout_ms, wm + 1)
-
-
 def _make_ttl_fn(idle_timeout_ms: int, ts_col: str):
     """Build the EventTimeTimeout state function for ``ordered_per_key``.
 
     Module-level (not a closure buried in the front door) so the TTL
-    semantics are unit-drivable with a fake GroupState — the same pattern
-    that keeps the transformWithState twin honest without the protobuf
-    runtime (see ``tests/test_streaming.py``)."""
+    semantics are unit-drivable with a fake GroupState (see
+    ``tests/test_streaming.py``)."""
 
     def fn(key, pdfs, state):
         if state.hasTimedOut:
@@ -203,8 +192,11 @@ def _make_ttl_fn(idle_timeout_ms: int, ts_col: str):
                 batch_ms if max_event_ms is None else max(max_event_ms, batch_ms)
             )
         state.update((last_seq, processed, max_event_ms))
+        # the engine's floor: a timeout must sit strictly past the current
+        # watermark (also the fallback for a key with no event time yet)
         wm = state.getCurrentWatermarkMs()
-        state.setTimeoutTimestamp(_ttl_expiry_ms(max_event_ms, idle_timeout_ms, wm))
+        base = wm if max_event_ms is None else max_event_ms
+        state.setTimeoutTimestamp(max(base + idle_timeout_ms, wm + 1))
         yield out
 
     return fn
@@ -289,154 +281,3 @@ def ordered_per_key(
             timeoutConf=conf,
         )
     )
-
-
-# ---------------------------------------------------------------------------
-# Spark 4 transformWithStateInPandas variant — same contract, modern API
-# ---------------------------------------------------------------------------
-try:  # Spark 4.x only: the StatefulProcessor API.  The class and its
-    # semantics are defined (and unit-tested against _process_key) whenever
-    # the API imports; the LIVE streaming path additionally needs
-    # google.protobuf — pyspark's state-server client imports
-    # pyspark.sql.streaming.proto.StateMessage_pb2 on every state call
-    # (stateful_processor_api_client.py), and the generated module needs the
-    # real protobuf runtime, not stubs.  That runtime is absent in this
-    # container and installs are disallowed, so HAVE_TWS (below) gates the
-    # end-to-end query separately from the API availability.
-    from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
-
-    class OrderedKeyProcessor(StatefulProcessor):
-        """K2 on the transformWithState API: ValueState carries the per-key
-        cursor (last_seq, processed); semantics identical to _process_key
-        (both delegate to the shared vectorized ``_advance``).  Requires the
-        RocksDB state store provider (bundled)."""
-
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._cursor = handle.getValueState("cursor", STATE_SCHEMA)
-
-        def handleInputRows(self, key, rows, timerValues):  # noqa: N802
-            if self._cursor.exists():
-                (last_seq, processed), fresh = self._cursor.get(), False
-            else:
-                last_seq, processed, fresh = -1, 0, True
-            pdf = pd.concat(list(rows), ignore_index=True)
-            out, last_seq, processed = _advance(
-                key[0], pdf, last_seq, processed, fresh
-            )
-            self._cursor.update((last_seq, processed))
-            yield out
-
-        def close(self) -> None:
-            pass
-
-    class OrderedKeyProcessorTTL(StatefulProcessor):
-        """K2 + event-time idle TTL on the transformWithState API — the
-        timer-based analog of ``_make_ttl_fn``'s EventTimeTimeout path.
-
-        The cursor ValueState carries (last_seq, processed, max_event_ms);
-        every input batch supersedes the key's single registered timer with
-        ``running max event time + TTL`` (never backwards — same running-max
-        clamp as the applyInPandasWithState variant), and
-        ``handleExpiredTimer`` clears the cursor when the watermark passes
-        it.  A post-lapse arrival starts a fresh cursor and announces it
-        via ``fresh_cursor`` — identical observable semantics, pinned by
-        the fake-handle parity test in ``tests/test_streaming.py``
-        (``_ttl_expiry_ms`` is shared, so the lapse points are
-        definitionally the same).  The LIVE query still needs the
-        state-server protobuf runtime (HAVE_TWS gate)."""
-
-        def __init__(self, idle_timeout_ms: int, ts_col: str = "publish_time"):
-            self._ttl = idle_timeout_ms
-            self._ts_col = ts_col
-
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._handle = handle
-            self._cursor = handle.getValueState("cursor", STATE_SCHEMA_TTL)
-
-        def handleInputRows(self, key, rows, timerValues):  # noqa: N802
-            if self._cursor.exists():
-                (last_seq, processed, max_event_ms) = self._cursor.get()
-                fresh = False
-            else:
-                last_seq, processed, max_event_ms, fresh = -1, 0, None, True
-            pdf = pd.concat(list(rows), ignore_index=True)
-            out, last_seq, processed = _advance(
-                key[0], pdf, last_seq, processed, fresh
-            )
-            ts = pdf[self._ts_col].max()
-            if not pd.isna(ts):
-                batch_ms = int(pd.Timestamp(ts).value // 1_000_000)
-                max_event_ms = (
-                    batch_ms if max_event_ms is None else max(max_event_ms, batch_ms)
-                )
-            self._cursor.update((last_seq, processed, max_event_ms))
-            # single-timer policy: this key's previous expiry is superseded,
-            # not accumulated — delete-then-register keeps exactly one live
-            # timer per key (the GroupState timeout-slot analog)
-            wm = timerValues.getCurrentWatermarkInMs()
-            for t in list(self._handle.listTimers()):
-                self._handle.deleteTimer(t)
-            self._handle.registerTimer(_ttl_expiry_ms(max_event_ms, self._ttl, wm))
-            yield out
-
-        def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):  # noqa: N802
-            # idle cursor lapses; emit nothing — drops processing_index
-            # with it (post-lapse rows restart at 0, fresh_cursor=true;
-            # same pinned contract as the applyInPandasWithState variant)
-            self._cursor.clear()
-            return
-            yield  # pragma: no cover - makes this a generator (empty)
-
-        def close(self) -> None:
-            pass
-
-    def ordered_per_key_tws(
-        stream_df: DataFrame,
-        idle_timeout_ms: int | None = None,
-        ts_col: str = "publish_time",
-    ) -> DataFrame:
-        """ordered_per_key on the Spark 4 transformWithState API (RocksDB
-        state store).  Same output contract as ordered_per_key, including
-        the idle-TTL variant: pass ``idle_timeout_ms`` for timer-based
-        event-time cursor expiry (requires a watermarked input, e.g.
-        ``ordered_per_key_tws(watermarked(stream, delay), ...)``).  The
-        live query needs the state-server protobuf runtime (HAVE_TWS gate
-        below); the processor semantics themselves are parity-tested
-        without it."""
-        if idle_timeout_ms is None:
-            proc, mode = OrderedKeyProcessor(), "none"
-        else:
-            if ts_col not in stream_df.columns:
-                raise ValueError(
-                    f"idle_timeout_ms requires event-time column {ts_col!r} "
-                    f"(watermarked upstream); stream has {stream_df.columns}"
-                )
-            proc, mode = OrderedKeyProcessorTTL(idle_timeout_ms, ts_col), "eventTime"
-        return (
-            stream_df.groupBy("key")
-            .transformWithStateInPandas(
-                statefulProcessor=proc,
-                outputStructType=OUTPUT_SCHEMA,
-                outputMode="append",
-                timeMode=mode,
-            )
-        )
-
-    HAVE_TWS_API = True
-except ImportError:  # pragma: no cover - older Spark
-    # Only a genuinely missing API (Spark < 4) may downgrade the flag: a
-    # collateral ImportError (e.g. a protobuf-related failure inside some
-    # pyspark build) must surface, not silently skip the processor-logic
-    # unit tests this flag gates (round-4 advice).
-    import pyspark.sql.streaming as _ss
-
-    if hasattr(_ss, "StatefulProcessor"):
-        raise
-    HAVE_TWS_API = False
-
-try:  # live transformWithState additionally needs the protobuf runtime
-    from google.protobuf import descriptor as _pb_descriptor  # noqa: F401
-
-    HAVE_TWS = HAVE_TWS_API
-except ImportError:
-    HAVE_TWS = False

@@ -18,7 +18,6 @@ Pure column-expression processors should skip this and use plain
 from __future__ import annotations
 
 from collections.abc import Callable, Iterator
-from dataclasses import dataclass
 
 import numpy as _np
 import pandas as pd
@@ -26,15 +25,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
-
-
-@dataclass(frozen=True)
-class ProcessorResult:
-    """ProcessingResult ADT analog (util/StandardTestTools.scala:9-14):
-    ok=True ⇒ ProcessSuccess, else ProcessFailure(error)."""
-
-    ok: bool
-    error: str | None = None
 
 
 def apply_processor(

@@ -34,14 +34,7 @@ from pyspark.sql import functions as F
 #: (payload columns ride along WHEN present; the lifecycle columns are the
 #: declared contract, so an empty frontier supports ``select("attempt")`` /
 #: ``select("available_at")`` exactly like a populated one).  ``_batch_id``
-#: is stamped in BOTH layouts — a partition column under the default
-#: idempotent writes, a plain data column on the non-idempotent append path
-#: — so the guarantee is layout-independent (round-10 advice) for ledgers
-#: written entirely by this version.  An append-mode pile that PREDATES the
-#: stamp mixes unstamped and stamped files in one directory; parquet
-#: directory reads do not schema-merge, so read such a pile with
-#: ``option("mergeSchema", "true")`` once (or compact it) to see the column
-#: on every row.
+#: is the partition column of every micro-batch write (``_write``).
 FRONTIER_SCHEMA = (
     "message_id string, attempt long, ok boolean, "
     "available_at timestamp, _batch_id int, _redelivered boolean"
@@ -69,7 +62,6 @@ class RetryRouter:
     dlq_path: str
     redelivery_delay_s: int = 10  # PulsarClientWrapper.scala:171
     max_attempts: int = 5
-    idempotent: bool = True
     #: terminal-SUCCESS index for the retry frontier (defaults to
     #: ``<retry_path>-resolved``).  An acked REDELIVERY (attempt > 1) must
     #: stop the redelivery loop the way the broker's ack does — but the
@@ -184,25 +176,14 @@ class RetryRouter:
         """Idempotent micro-batch write: partition by batch id with dynamic
         overwrite, so a REPLAYED batch (crash between sink write and offset
         commit) overwrites its own partition instead of duplicating —
-        foreachBatch's at-least-once becomes effectively-once.
-
-        The non-idempotent path stamps ``_batch_id`` too (as a plain data
-        column): ``FRONTIER_SCHEMA`` declares the column, so the populated
-        frontier must carry it in BOTH layouts or a downstream
-        ``select("_batch_id")`` would work only on the empty path
-        (round-10 advice)."""
-        if self.idempotent:
-            (
-                df.withColumn("_batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("_batch_id")
-                .parquet(path)
-            )
-        else:
-            df.withColumn("_batch_id", F.lit(batch_id)).write.mode(
-                "append"
-            ).parquet(path)
+        foreachBatch's at-least-once becomes effectively-once."""
+        (
+            df.withColumn("_batch_id", F.lit(batch_id))
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("_batch_id")
+            .parquet(path)
+        )
 
     def route_batch(self, batch: DataFrame, batch_id: int = 0) -> None:
         """foreachBatch body: one call per micro-batch.
@@ -332,7 +313,7 @@ class RetryRouter:
         )
 
     def due_retries(
-        self, spark: SparkSession, as_of=None, snapshot: bool = False
+        self, spark: SparkSession, as_of=None, snapshot: bool = True
     ) -> DataFrame:
         """Re-ingestion scan: rows whose redelivery delay has elapsed.
 
@@ -358,20 +339,17 @@ class RetryRouter:
         (``FRONTIER_SCHEMA``), so downstream projections never break on the
         empty path alone.
 
-        Reader caveat: the returned DataFrame is LAZY over the ledger
-        directory, and the maintenance lease serializes WRITERS only — a
-        maintenance swap between this call and the caller's action
-        invalidates the captured file listing (Spark raises
-        FAILED_READ_FILE rather than reading stale data).  Consume or
-        route the frontier before running a maintenance op, or re-call
-        after one; the driver loop that interleaves ``due_retries`` /
-        ``route_batch`` / ``compact`` sequentially (the
-        ``examples/retry_maintenance.py`` shape) never hits the window.
-        For a reader that must OUTLIVE maintenance (an async consumer, a
-        diagnostic held across a compaction window), ``snapshot=True``
-        materializes the frontier at call time (``localCheckpoint``) —
-        swap-proof snapshot isolation, affordable because the frontier is
-        bounded by the failure rate, not the traffic.
+        The frontier is MATERIALIZED at call time (``localCheckpoint``),
+        affordable because it is bounded by the failure rate, not the
+        traffic.  A frame LAZY over the ledger directory is unsafe to route:
+        ``route_batch``'s retry-ledger write makes Spark re-cache every
+        persisted plan that reads that path, so its later DLQ write re-reads
+        the NEW ledger and the same message lands in both.  The snapshot is
+        also swap-proof — the maintenance lease serializes WRITERS only, and
+        a lazy frame's file listing dies with a maintenance swap (Spark
+        raises FAILED_READ_FILE rather than reading stale data).
+        ``snapshot=False`` returns the lazy frame for a caller that only
+        aggregates it at once (``status()``'s frontier count).
         """
         # a crash INSIDE a ledger swap leaves the directory missing between
         # the two renames — without recovery that reads as an EMPTY frontier
@@ -566,7 +544,7 @@ class RetryRouter:
             # one pollable unit: a mutator swapping a ledger directory
             # mid-call invalidates ALL of these listings together, so they
             # retry together rather than returning a mixed-epoch snapshot
-            frontier = self.due_retries(spark, as_of=as_of).count()
+            frontier = self.due_retries(spark, as_of=as_of, snapshot=False).count()
             return {
                 "retry_rows": _count(self.retry_path),
                 "frontier": frontier,
@@ -729,10 +707,7 @@ class RetryRouter:
         alone dominates read planning.  Batches ``<= up_to_batch_id`` fold
         into the single ``_batch_id=archive_batch_id`` partition (merging
         with any previous archive); newer partitions keep their layout so
-        replay idempotence still holds for them.  Only this partitioned
-        layout folds: a non-idempotent (append) sink carries ``_batch_id``
-        as a data column but has no per-batch directories — the call is a
-        no-op (``archived: 0``) there, by construction not by accident.
+        replay idempotence still holds for them.
 
         SAFETY — derived, not trusted: ``up_to_batch_id`` must be strictly
         below any batch the stream could still replay — an archived batch
@@ -861,7 +836,7 @@ class RetryRouter:
             )
         parts = self._sink_partitions()
         if not parts:
-            return {"archived": 0}  # non-partitioned layout: nothing to fold
+            return {"archived": 0}  # no partition written yet: nothing to fold
         parts_before = len(parts)
         old_ids = sorted(k for k in parts if k <= up_to_batch_id)
         if not old_ids or old_ids == [archive_batch_id]:
@@ -1317,14 +1292,7 @@ class RetryRouter:
             else:
                 tmp = path + tag + ".new"
                 shutil.rmtree(tmp, ignore_errors=True)
-                writer = df.write.mode("overwrite")
-                # partition the rewrite ONLY for the idempotent layout: a
-                # non-idempotent ledger appends plain files at the root, and
-                # a partitioned rewrite would leave later appends next to
-                # partition dirs — a mixed layout partition discovery rejects
-                if self.idempotent and "_batch_id" in df.columns:
-                    writer = writer.partitionBy("_batch_id")
-                writer.parquet(tmp)
+                df.write.mode("overwrite").partitionBy("_batch_id").parquet(tmp)
                 if os.path.exists(path):
                     os.rename(path, old)
                 os.rename(tmp, path)

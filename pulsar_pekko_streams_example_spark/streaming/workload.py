@@ -44,9 +44,6 @@ class Workload:
 
     workload_name: str
     topic: str  # source identifier (path/topic)
-    processing_parallelism: int = 5
-    ack_parallelism: int = 5
-    ordered: bool = False
 
     def __post_init__(self) -> None:
         if not isinstance(self.workload_name, str) or not self.workload_name:

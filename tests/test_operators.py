@@ -108,6 +108,42 @@ def test_shared_df_memoizes_and_substitution_is_exact(spark):
     assert d_pairs == c_pairs
 
 
+def test_shared_cache_build_straddling_reset_is_not_stored(spark):
+    """operators/cache.py: a build during which ``reset()`` runs is handed
+    to its caller but NOT memoized (the generation check), so the next
+    caller rebuilds; ``reset()`` unpersists the DataFrame entries it drops."""
+    from pulsar_pekko_streams_example_spark.operators import cache
+
+    builds = []
+
+    def build_obj():
+        builds.append(1)
+        if len(builds) == 1:
+            cache.reset(spark)  # a reset lands partway through the build
+        return len(builds)
+
+    assert cache.shared_obj(spark, ("t-straddle-obj",), build_obj) == 1
+    assert cache.shared_obj(spark, ("t-straddle-obj",), build_obj) == 2
+    assert cache.shared_obj(spark, ("t-straddle-obj",), build_obj) == 2
+
+    df_builds = []
+
+    def build_df():
+        df_builds.append(1)
+        if len(df_builds) == 1:
+            cache.reset(spark)
+        return spark.range(len(df_builds))
+
+    first = cache.shared_df(spark, ("t-straddle-df",), build_df)
+    assert first.count() == 1  # returned to its caller all the same
+    second = cache.shared_df(spark, ("t-straddle-df",), build_df)
+    assert second is not first and second.count() == 2
+    assert cache.shared_df(spark, ("t-straddle-df",), build_df) is second
+    assert second.is_cached
+    cache.reset(spark)
+    assert not second.is_cached
+
+
 def test_shared_obj_memoizes_and_bpe_chain_substitution_is_exact(spark):
     """operators/cache.py::shared_obj (round 17): one build per key, reset()
     forgets (the bench's sequential pass must measure a REAL chain rebuild),

@@ -18,6 +18,7 @@ from __future__ import annotations
 
 import glob
 import os
+import re
 
 from pulsar_pekko_streams_example_spark.plans import REGISTRY
 
@@ -28,7 +29,11 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _newest_census() -> str:
-    paths = sorted(glob.glob(os.path.join(REPO, "plans", "r*", "plan_census.tsv")))
+    # numeric round order: lexicographically "r100" would sort before "r99"
+    paths = sorted(
+        glob.glob(os.path.join(REPO, "plans", "r*", "plan_census.tsv")),
+        key=lambda p: int(re.search(r"r(\d+)", os.path.relpath(p, REPO))[1]),
+    )
     assert paths, "no committed plans/r*/plan_census.tsv found"
     return paths[-1]
 

@@ -1044,11 +1044,11 @@ def test_workload_conflicting_duplicates_collapse_first_wins():
     part4/WorkloadManagementService.scala:122-124)."""
     from pulsar_pekko_streams_example_spark.streaming.workload import Workload
 
-    a5 = Workload("a", "t", processing_parallelism=5)
-    a9 = Workload("a", "t", processing_parallelism=9)
-    assert a5 == a9 and len({a5, a9}) == 1
-    assert next(iter({a5, a9})).processing_parallelism == 5
-    assert next(iter({a9, a5})).processing_parallelism == 9
+    a1 = Workload("a", "topic-1")
+    a2 = Workload("a", "topic-2")
+    assert a1 == a2 and len({a1, a2}) == 1
+    assert next(iter({a1, a2})).topic == "topic-1"
+    assert next(iter({a2, a1})).topic == "topic-2"
 
 
 def test_reconcile_isolates_poisoned_factory(spark):
@@ -2193,47 +2193,6 @@ def test_compact_archive_snapshots_are_stamped_per_window(spark, tmpdir):
     assert {(m, a) for t, m, a in per_window if t == w2} == {("m-live", 2)}
 
 
-def test_nonidempotent_append_stamps_batch_id_too(spark, tmpdir):
-    """FRONTIER_SCHEMA declares ``_batch_id``; the non-idempotent append
-    path must stamp it as a data column so a downstream
-    ``select("_batch_id")`` works on the POPULATED frontier, not only the
-    empty one (round-10 advice)."""
-    router = _mk_router(tmpdir, idempotent=False)
-    router.route_batch(
-        spark.createDataFrame(
-            [("m1", 1, False), ("m2", 1, True)],
-            "message_id string, attempt long, ok boolean",
-        ),
-        batch_id=7,
-    )
-    ledger = spark.read.parquet(router.retry_path)
-    assert [r["_batch_id"] for r in ledger.select("_batch_id").collect()] == [7]
-    due = router.due_retries(spark, as_of=AS_OF_FUTURE)
-    assert [
-        (r.message_id, r["_batch_id"]) for r in due.select("message_id", "_batch_id").collect()
-    ] == [("m1", 7)]
-    # ledger maintenance keeps the append layout readable (unpartitioned
-    # rewrite + later appends at the root must coexist)
-    assert router.compact(spark)["kept"] == 1
-    router.route_batch(
-        spark.createDataFrame(
-            [("m3", 1, False)], "message_id string, attempt long, ok boolean"
-        ),
-        batch_id=8,
-    )
-    assert {
-        (r.message_id, r["_batch_id"])
-        for r in spark.read.parquet(router.retry_path).select(
-            "message_id", "_batch_id"
-        ).collect()
-    } == {("m1", 7), ("m3", 8)}
-    # the append sink has _batch_id as a DATA column but no per-batch
-    # directories: the partition-scoped fold is a documented no-op there
-    assert router.compact_sink(spark, up_to_batch_id=7, force=True) == {
-        "archived": 0
-    }
-
-
 def test_killed_lease_holder_unblocks_without_manual_cleanup(spark, tmpdir):
     """The kernel-release claim, proven with a REAL process death: a
     subprocess takes the flock and is SIGKILLed mid-hold — no unlock code
@@ -3132,7 +3091,7 @@ def test_concurrent_stream_maintenance_and_status_conserve_messages(
     threads[0].join(300)  # the stream finishes its 10 batches
 
     # drain the retry frontier WHILE maintenance still runs for a couple of
-    # cycles.  snapshot=True is LOAD-BEARING here: the default lazy frontier
+    # cycles.  snapshot=True is LOAD-BEARING here: a lazy frontier
     # captures its file listing at first action, and a compact swapping the
     # ledger between that listing and the plan's re-execution inside
     # route_batch fails the batch on deleted files — exactly the
@@ -3363,13 +3322,13 @@ def test_due_retries_snapshot_survives_concurrent_compaction(spark, tmpdir):
     """``snapshot=True`` materializes the frontier at call time, so the
     frame outlives a maintenance swap that replaces the ledger directory
     under it — snapshot isolation for readers held across a compaction
-    window (the lease serializes writers only).  The default LAZY frame
+    window (the lease serializes writers only).  The opt-in LAZY frame
     either fails loud on the invalidated listing or, if the engine
     re-lists, returns the true frontier — never a silent partial."""
     router = _mk_router(tmpdir)
     before = _seed_live_and_resolved(spark, router)
     snap = router.due_retries(spark, as_of=AS_OF_FUTURE, snapshot=True)
-    lazy = router.due_retries(spark, as_of=AS_OF_FUTURE)
+    lazy = router.due_retries(spark, as_of=AS_OF_FUTURE, snapshot=False)
 
     assert router.compact(spark)["kept"] == 1  # replaces the ledger dir
     assert {(r.message_id, r.attempt) for r in snap.collect()} == before
@@ -3379,6 +3338,37 @@ def test_due_retries_snapshot_survives_concurrent_compaction(spark, tmpdir):
         pass  # fail-loud on the swapped-away listing is the contract
     else:
         assert rows == before  # a re-list must still be the true frontier
+
+
+def test_routing_the_due_frontier_writes_each_message_to_one_ledger(
+    spark, tmpdir
+):
+    """Routing ``due_retries``' frontier straight back through
+    ``route_batch`` (the redelivery loop's shape) must land every message
+    in exactly one ledger.  A frontier LAZY over the retry directory broke
+    that: the call's own retry-ledger write re-caches its persisted batch
+    by path, so the DLQ write re-read the NEW ledger — m1, still inside its
+    budget, reached the retry ledger AND the DLQ, while the aggregate that
+    gates the writes counted one DLQ row."""
+    router = _mk_router(tmpdir)  # max_attempts=3
+    router.route_batch(
+        spark.createDataFrame(
+            [("m1", 1, False), ("m2", 2, False)],
+            "message_id string, attempt long, ok boolean",
+        ),
+        batch_id=0,
+    )
+    due = router.due_retries(spark, as_of=AS_OF_FUTURE)
+    # the populated frontier carries its ledger partition, like FRONTIER_SCHEMA
+    assert {(r.message_id, r.attempt, r._batch_id) for r in due.collect()} == {
+        ("m1", 2, 0), ("m2", 3, 0),
+    }
+    router.route_batch(due.withColumn("ok", F.lit(False)), batch_id=1)
+
+    dlq = {(r.message_id, r.attempt) for r in spark.read.parquet(router.dlq_path).collect()}
+    assert dlq == {("m2", 3)}
+    assert router.counters["dlq"] == 1
+    assert _frontier(spark, router) == {("m1", 3)}
 
 
 def test_mutator_lease_auto_recovers_before_touching_ledgers(
